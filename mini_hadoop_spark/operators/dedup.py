@@ -33,12 +33,12 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import os
 import threading
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from mini_hadoop_spark import artifacts
 from mini_hadoop_spark.functions.text import (
     round_half_up,
     shingles,
@@ -69,18 +69,17 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     MEMOIZED + materialized (eager localCheckpoint) per session+sf_dir.
 
     Tokenize+explode is the CPU-heavy base of FOUR pipelines (exact
-    Jaccard, containment, xxhash64 MinHash, md5 MinHash); before r7 each
-    pair-graph build recomputed it, which dominated bench.py's cold
-    index_build (the judge measured the md5 build at 22.7 s where the
-    warm plan costs ~3.6 s).  One shared materialization means the first
-    build pays it and the other three reuse the checkpointed blocks —
-    same pattern as the pair/label memo below, same clear_memo() hook.
+    Jaccard, containment, xxhash64 MinHash, md5 MinHash); recomputed per
+    pair-graph build it dominated bench.py's cold index_build (22.7 s for
+    the md5 build whose warm plan costs ~3.6 s).  As one shared session
+    artifact, like the pair/label sets below, the first build pays it
+    and the other three reuse the checkpointed blocks.
 
     The scan is spread across cores first: a small-SF single-file scan
     would otherwise tokenize on one core (see functions/partitioning.py
     — no-op at scale).
 
-    r17: the index rows additionally carry ``n_sh`` — the document's
+    The index rows also carry ``n_sh`` — the document's
     DISTINCT-shingle count, i.e. ``size(sharr)`` carried through the
     explode via the struct-transform idiom (a bare-Attribute generator
     child would let InferFiltersFromGenerate push the whole
@@ -93,10 +92,10 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the carried column instead of re-aggregating + joining the
     corpus-sized stream.  The one-time repartition cost lands in the
     itemized index build, like the materialization itself."""
-    key = _memo_key(spark, sf_dir, "shingles", "")
-    if key not in _memo:
+
+    def build() -> DataFrame:
         docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-        _memo[key] = (
+        return (
             docs.select("doc_id", tokens("text").alias("t"))
             .select("doc_id", shingles("t").alias("sharr"))
             .select(
@@ -114,7 +113,8 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition("shingle")
             .localCheckpoint(eager=True)
         )
-    return _memo[key]
+
+    return artifacts.get(spark, sf_dir, ("shingles",), build)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,7 +306,7 @@ WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.content_hash = b.content_hash
 # all consume the same scored pair set, and the clustering queries also
 # share one connected-components labeling.  Each registered query must
 # stay standalone (the driver calls them independently), so the sharing
-# mechanism is a per-(application, sf_dir, method) memo of the SMALL
+# mechanism is a per-(session, sf_dir, method) artifact of the SMALL
 # materialized results (pairs ≈ dozens of rows, labels ≈ clustered docs)
 # — the expensive candidate generation runs once per session instead of
 # once per query.  ``method`` selects the candidate generator:
@@ -321,22 +321,6 @@ WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.content_hash = b.content_hash
 # ---------------------------------------------------------------------------
 
 _PAIR_METHODS = ("jaccard", "minhash", "minhash_md5")
-_memo: dict[tuple, DataFrame] = {}
-#: (n_vectors, candidate_estimate) per (session, corpus, threshold,
-#: dims) — the grid preflight's two tiny jobs run once per corpus
-_grid_estimate_memo: dict[tuple, tuple] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str, what: str, method: str) -> tuple:
-    return (spark.sparkContext.applicationId, os.path.normpath(sf_dir), what, method)
-
-
-def clear_memo() -> None:
-    """Drop memoized pair/label frames and grid preflight estimates
-    (tests that rewrite an sf_dir in place call this; distinct tmp dirs
-    never collide)."""
-    _memo.clear()
-    _grid_estimate_memo.clear()
 
 
 def near_dup_pairs(spark: SparkSession, sf_dir: str, method: str = "jaccard") -> DataFrame:
@@ -345,25 +329,25 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str, method: str = "jaccard") ->
     ``jaccard`` (exact) or ``est_jaccard`` (minhash estimate)."""
     if method not in _PAIR_METHODS:
         raise ValueError(f"unknown near-dup method {method!r}; expected one of {_PAIR_METHODS}")
-    key = _memo_key(spark, sf_dir, "pairs", method)
-    if key not in _memo:
-        plan = {
-            "jaccard": _near_jaccard_plan,
-            "minhash": _minhash_lsh_plan,
-            "minhash_md5": _minhash_lsh_md5_plan,
-        }[method]
-        _memo[key] = plan(spark, sf_dir).localCheckpoint(eager=True)
-    return _memo[key]
+    plan = {
+        "jaccard": _near_jaccard_plan,
+        "minhash": _minhash_lsh_plan,
+        "minhash_md5": _minhash_lsh_md5_plan,
+    }[method]
+    return artifacts.get(
+        spark, sf_dir, ("pairs", method), lambda: plan(spark, sf_dir).localCheckpoint(eager=True)
+    )
 
 
 def near_dup_labels(spark: SparkSession, sf_dir: str, method: str = "jaccard") -> DataFrame:
     """(id, label) connected-component labels over the near-dup pair
     graph — memoized so clusters/triangles run the HashMin loop once."""
-    key = _memo_key(spark, sf_dir, "labels", method)
-    if key not in _memo:
+
+    def build() -> DataFrame:
         pairs = near_dup_pairs(spark, sf_dir, method).select("doc_a", "doc_b")
-        _memo[key] = connected_components(pairs, src="doc_a", dst="doc_b", max_iter=CC_MAX_ITER)
-    return _memo[key]
+        return connected_components(pairs, src="doc_a", dst="doc_b", max_iter=CC_MAX_ITER)
+
+    return artifacts.get(spark, sf_dir, ("labels", method), build)
 
 
 def _near_jaccard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1106,9 +1090,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized per (session, sf_dir) — the same build-once index
     policy as the MinHash family (bench itemizes the build as
     index_build.pairs_simhash)."""
-    key = _memo_key(spark, sf_dir, "pairs", "simhash")
-    if key in _memo:
-        return _memo[key]
+    return artifacts.get(spark, sf_dir, ("pairs", "simhash"), lambda: _simhash_pairs(spark, sf_dir))
+
+
+def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
     # token INSTANCES with cnt=1, not a pre-counted (doc, token) frame:
     # sum_instances(±1) == sum_distinct(cnt·±1), so skipping the
@@ -1124,8 +1109,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint pipeline (the same build-the-index-once pattern as the
     # LSH/IVF/shingle indexes; |docs| rows of 2 longs)
     fp = simhash(toks).localCheckpoint(eager=False)
-    _memo[key] = _simhash_block_pairs(fp, SIMHASH_BITS).localCheckpoint(eager=True)
-    return _memo[key]
+    return _simhash_block_pairs(fp, SIMHASH_BITS).localCheckpoint(eager=True)
 
 
 def _simhash_block_pairs(fp: DataFrame, num_bits: int) -> DataFrame:
@@ -1184,9 +1168,12 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes): identical plan shape to ``dedup_simhash`` — SWAR-packed
     majority aggregate, block-pigeonhole candidates, exact Hamming.
     Memoized + materialized per (session, sf_dir) like its sibling."""
-    key = _memo_key(spark, sf_dir, "pairs", "simhash_md5")
-    if key in _memo:
-        return _memo[key]
+    return artifacts.get(
+        spark, sf_dir, ("pairs", "simhash_md5"), lambda: _simhash_md5_pairs(spark, sf_dir)
+    )
+
+
+def _simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
     toks = (
         docs.select("doc_id", F.explode(tokens("text")).alias("token"))
@@ -1196,8 +1183,7 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = simhash(toks, num_bits=SIMHASH_MD5_BITS, h_col="hm").localCheckpoint(eager=False)
-    _memo[key] = _simhash_block_pairs(fp, SIMHASH_MD5_BITS).localCheckpoint(eager=True)
-    return _memo[key]
+    return _simhash_block_pairs(fp, SIMHASH_MD5_BITS).localCheckpoint(eager=True)
 
 
 def _simhash_md5_sql() -> str:
@@ -1540,16 +1526,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The preflight estimate (see :func:`embedding_dup_pairs`) is
     memoized per (session, corpus) — a fixed corpus's cell histogram
     never changes, so the guard's two tiny jobs run once, not per
-    invocation; cleared by :func:`clear_memo` like every other
-    session-scoped artifact."""
+    invocation."""
     emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    key = _memo_key(spark, sf_dir, "grid_estimate", f"{COSINE_DUP_THRESHOLD}/{GRID_DIMS}")
-    if key not in _grid_estimate_memo:
-        _grid_estimate_memo[key] = grid_candidate_estimate(
-            v, COSINE_DUP_THRESHOLD, GRID_DIMS
-        )
-    return embedding_dup_pairs(v, precomputed_estimate=_grid_estimate_memo[key])
+    estimate = artifacts.get(
+        spark,
+        sf_dir,
+        ("grid_estimate", COSINE_DUP_THRESHOLD, GRID_DIMS),
+        lambda: grid_candidate_estimate(v, COSINE_DUP_THRESHOLD, GRID_DIMS),
+    )
+    return embedding_dup_pairs(v, precomputed_estimate=estimate)
 
 
 DEDUP_EMBEDDING_COSINE_SQL = f"""

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from mini_hadoop_spark import artifacts
+
 EVENTS_STREAM_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -144,7 +146,7 @@ _drain_scope_lock = threading.Lock()
 #: r15: module-global scalars cross-talked between two concurrent
 #: SparkSessions — an out-of-order exit left one session permanently
 #: clamped to 4 partitions and restored its saved value into the other;
-#: the object key also keeps newSession() clones — same applicationId,
+#: the object key also keeps newSession() clones — same SparkContext,
 #: separate SQLConf — independent); value = [depth, saved_conf_value].
 #: Entries are removed when the last drain exits, so no session is
 #: retained beyond its active drains.
@@ -214,25 +216,23 @@ def _staged_file(sf_dir: str, table: str, prefix: str):
         shutil.rmtree(stage, ignore_errors=True)
 
 
-# (application, sf_dir, drain) -> the drained result, materialized once
-# per session.  Every registered drain is a real end-to-end streaming run
-# over a bounded staged input whose result is IMMUTABLE for a given
-# corpus — rerunning the identical drain per bench pass / per driver call
-# re-pays state-store setup for the same rows.  Like the index artifacts,
-# the one-time run is itemized by bench.py (stream_* in index_build)
-# instead of buried in whichever caller goes first.
-_drain_memo: dict[tuple, DataFrame] = {}
-
-
 def _memo_drain(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), name)
-    if key not in _drain_memo:
+    """The drained result of ``build`` as a session artifact,
+    materialized once per (session, corpus).  Every registered drain is
+    a real end-to-end streaming run over a bounded staged input whose
+    result is IMMUTABLE for a given corpus — rerunning the identical
+    drain per bench pass / per driver call re-pays state-store setup for
+    the same rows.  Like the index artifacts, the one-time run is
+    itemized by bench.py (stream_* in index_build) instead of buried in
+    whichever caller goes first."""
+
+    def checkpointed() -> DataFrame:
         df = build()
         # builds that must materialize BEFORE their scratch dir is
         # removed return an already-checkpointed frame (LogicalRDD);
         # re-checkpointing would pin a second full copy of the result
-        # for the session lifetime (r16 code review: the PIT drain's
-        # report is per-fact, the largest drain output in the suite)
+        # for the session lifetime (the PIT drain's report is per-fact,
+        # the largest drain output in the suite)
         try:
             already = (
                 df._jdf.queryExecution().analyzed().getClass().getSimpleName()
@@ -240,8 +240,9 @@ def _memo_drain(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame
             )
         except Exception:
             already = False
-        _drain_memo[key] = df if already else df.localCheckpoint(eager=True)
-    return _drain_memo[key]
+        return df if already else df.localCheckpoint(eager=True)
+
+    return artifacts.get(spark, sf_dir, ("drain", name), checkpointed)
 
 
 def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,7 +258,7 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     data copy; falls back to a real copy cross-device) into a per-call
     tmp dir.  The memory-sink table name is unique per call; 'complete'
     mode emits the full final state, which for a drained bounded input
-    equals the batch aggregation exactly.  r10: the run is memoized per
+    equals the batch aggregation exactly.  The run is memoized per
     (session, corpus) like the join/IVF drains."""
 
     def build() -> DataFrame:
@@ -284,7 +285,7 @@ def streaming_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly drain this puts both streaming state shapes Spark maintains
     natively — tumbling windows and merging session windows — inside
     the driver's oracle gate, not just the in-repo parity tests.
-    Memoized per (session, corpus) — see _drain_memo."""
+    Memoized per (session, corpus) — see _memo_drain."""
 
     def build() -> DataFrame:
         import uuid
@@ -538,16 +539,14 @@ FROM f LEFT JOIN v
 STREAMING_PIT_SQL = _streaming_pit_sql()
 
 
-# (application, sf_dir) -> the drained LEFT OUTER interval-join result,
-# materialized once per session.  The outer drain's matched-pair rows
-# ARE the inner join result (a left-outer interval join emits matched
-# pairs identically to the inner form — same gap, same 1h watermark;
-# the outer adds only watermark-expired null rows), so ONE end-to-end
-# streaming run serves both registered join drains: the VERDICT r8 #4
-# "reuse one streaming query where the oracle allows" trim.  Both
-# oracles stay the independent batch SQL forms — the shared run must
-# satisfy each exactly.
-_ojoin_memo: dict[tuple, DataFrame] = {}
+# The drained LEFT OUTER interval-join result, materialized once per
+# (session, corpus).  The outer drain's matched-pair rows ARE the inner
+# join result (a left-outer interval join emits matched pairs
+# identically to the inner form — same gap, same 1h watermark; the outer
+# adds only watermark-expired null rows), so ONE end-to-end streaming
+# run serves both registered join drains.  Both oracles stay the
+# independent batch SQL forms — the shared run must satisfy each
+# exactly.
 
 
 def _outer_join_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,8 +556,8 @@ def _outer_join_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mini_hadoop_spark.streaming.joins import clicks_with_errors_outer
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if key not in _ojoin_memo:
+
+    def build() -> DataFrame:
         table = f"stream_ojoin_{uuid.uuid4().hex[:8]}"
         with _staged_file(sf_dir, "events", "stream_ojoin_") as stage, _drain_scope(spark):
             run_stream_to_memory(
@@ -566,19 +565,9 @@ def _outer_join_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 table,
                 output_mode="append",
             )
-        _ojoin_memo[key] = spark.table(table).localCheckpoint(eager=True)
-    return _ojoin_memo[key]
+        return spark.table(table).localCheckpoint(eager=True)
 
-
-def clear_drain_memos() -> None:
-    """Drop every drained-result memo (tests that rewrite an sf_dir in
-    place call this; distinct tmp dirs never collide)."""
-    _ojoin_memo.clear()
-    _ivf_stream_memo.clear()
-    _drain_memo.clear()
-
-
-clear_ojoin_memo = clear_drain_memos  # r9 name, kept for compatibility
+    return artifacts.get(spark, sf_dir, ("drain", "outer_join"), build)
 
 
 def _format_join_result(df: DataFrame) -> DataFrame:
@@ -606,7 +595,7 @@ def streaming_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly.  Timestamps are emitted as formatted strings so both
     engines canonicalize identically.
 
-    r9: served by the SHARED outer-join drain (one real end-to-end
+    Served by the SHARED outer-join drain (one real end-to-end
     streaming run per session) restricted to its matched rows — exact
     by construction, and the independent inner-join oracle still gates
     it.  A stream-stream join instantiates FOUR state stores per
@@ -627,7 +616,7 @@ def streaming_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     drains don't: a batch-side build in a streaming plan + un-windowed
     aggregation state.  The oracle is the plain batch join+group SQL —
     a drained bounded input must match it exactly.  Memoized per
-    (session, corpus) — see _drain_memo."""
+    (session, corpus) — see _memo_drain."""
 
     def build() -> DataFrame:
         import uuid
@@ -674,7 +663,7 @@ def streaming_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(max click_ts, max error_ts) − watermark − gap — the global
     watermark is the MIN over the two branch watermark operators, and
     newer clicks are still buffered when a bounded drain ends, so they
-    emit nothing.  r9: the end-to-end run is the shared memoized
+    emit nothing.  The end-to-end run is the shared memoized
     _outer_join_drained (also serving streaming_join_drain)."""
     return _format_join_result(_outer_join_drained(spark, sf_dir))
 
@@ -684,7 +673,6 @@ def streaming_outer_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the POST-swap index): the same shared-run trim as the join drains.
 # Both oracles stay independent batch SQL forms the shared run must
 # satisfy exactly (lists CTE / the recenter-apply chain).
-_ivf_stream_memo: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def _ivf_stream_drained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -703,8 +691,8 @@ def _ivf_stream_drained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
         run_incremental_ivf_index,
     )
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if key not in _ivf_stream_memo:
+
+    def build() -> tuple[DataFrame, DataFrame]:
         centroids = ivf_quantizer(spark, sf_dir)
         src = table_path(sf_dir, "embeddings")
         root = tempfile.mkdtemp(prefix="stream_ivf_")
@@ -722,8 +710,9 @@ def _ivf_stream_drained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
             post = read_ivf_index(spark, index_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
-        _ivf_stream_memo[key] = (pre, post)
-    return _ivf_stream_memo[key]
+        return (pre, post)
+
+    return artifacts.get(spark, sf_dir, ("drain", "ivf_lifecycle"), build)
 
 
 def streaming_ivf_maintenance_drain(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,14 +34,16 @@ def test_training_memoized_across_queries(spark):
     """Both registered queries must share ONE memoized training run per
     (session, corpus) — the build-once model discipline bench.py
     itemizes as classifier_model."""
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import classifier
 
+    def unbuilt():
+        raise AssertionError("training run is not a memoized artifact")
+
     classifier.classifier_train_curve(spark, SF_DIR).collect()
-    key = (spark.sparkContext.applicationId, os.path.normpath(SF_DIR))
-    assert key in classifier._train_memo
-    memo_obj = classifier._train_memo[key]
+    memo_obj = artifacts.get(spark, SF_DIR, ("classifier_train",), unbuilt)
     classifier.classifier_eval_confusion(spark, SF_DIR).collect()
-    assert classifier._train_memo[key] is memo_obj
+    assert artifacts.get(spark, SF_DIR, ("classifier_train",), unbuilt) is memo_obj
 
 
 def test_student_learns_teacher_at_driver_sf(spark):
@@ -97,6 +99,7 @@ def test_train_prod_deterministic_and_learns(spark):
     CLS_PROD_BATCH_SIZE)."""
     from pyspark.sql import functions as F
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import classifier
 
     first = [tuple(r) for r in classifier.classifier_train_prod(spark, SF_DIR).orderBy("epoch").collect()]
@@ -109,25 +112,9 @@ def test_train_prod_deterministic_and_learns(spark):
     acc = final[4] / (final[3] + final[4])
     assert acc >= 0.85, f"prod-geometry student stopped learning: {acc:.3f}"
 
-    classifier.clear_memo()
+    artifacts.clear()
     second = [tuple(r) for r in classifier.classifier_train_prod(spark, SF_DIR).orderBy("epoch").collect()]
     assert first == second, "constant-batch training is not deterministic"
-
-
-def test_clear_memo_frees_checkpoint_blocks(spark):
-    """Code-review r14: Dataset.unpersist() is a no-op for
-    localCheckpoint blocks (it only drops CacheManager entries), so
-    clear_memo must unpersist the tracked checkpoint RDDs by id — a
-    cold re-run (the scale smoke between corpora) must not keep the
-    prior corpus's doc table in executor storage."""
-    from mini_hadoop_spark.operators import classifier
-
-    classifier.clear_memo()
-    base = len(classifier._persistent_rdd_ids(spark))
-    classifier._doc_table(spark, SF_DIR)
-    assert len(classifier._persistent_rdd_ids(spark)) > base
-    classifier.clear_memo()
-    assert len(classifier._persistent_rdd_ids(spark)) == base
 
 
 def test_train_prod_empty_train_split(spark, tmp_path):
@@ -144,34 +131,3 @@ def test_train_prod_empty_train_split(spark, tmp_path):
     n_train, n_batches, stats, w, _ = classifier._train_prod(spark, d)
     assert n_train == 0 and w == {}
     assert all(s[1] == 0 and s[2] == 0 for s in stats)
-
-
-def test_checkpoint_id_attribution_exact_under_concurrency(spark):
-    """ADVICE r15: _local_checkpoint_tracked must attribute EXACTLY the
-    checkpoint RDD it created — even when another thread checkpoints
-    concurrently (bench's concurrent build groups).  Run two tracked
-    checkpoints racing each other repeatedly and assert each call
-    returns exactly one id and the ids never overlap; then unpersist by
-    id and confirm both frames' blocks are freed independently."""
-    import threading
-
-    from mini_hadoop_spark.operators.classifier import _local_checkpoint_tracked
-
-    results = {}
-
-    def work(tag, n):
-        df = spark.range(n).selectExpr("id", "id * 2 AS x")
-        results[tag] = _local_checkpoint_tracked(spark, df)
-
-    for round_no in range(3):
-        t1 = threading.Thread(target=work, args=("a", 1000 + round_no))
-        t2 = threading.Thread(target=work, args=("b", 2000 + round_no))
-        t1.start(); t2.start(); t1.join(); t2.join()
-        (da, ids_a), (db, ids_b) = results["a"], results["b"]
-        assert len(ids_a) == 1 and len(ids_b) == 1, (ids_a, ids_b)
-        assert not set(ids_a) & set(ids_b)
-        assert da.count() == 1000 + round_no and db.count() == 2000 + round_no
-        jsc = spark.sparkContext._jsc.sc()
-        for rid in ids_a + ids_b:
-            assert jsc.getPersistentRDDs().contains(rid)
-            jsc.getPersistentRDDs().apply(rid).unpersist(False)

@@ -711,6 +711,66 @@ def test_matryoshka_agreement_go_no_go_semantics(spark):
     assert rows[dims[-1]]["topk_agreement"] >= rows[dims[0]]["topk_agreement"]
 
 
+def _matryoshka_corpus(tmp_path, edit):
+    """A 40-vector, 16-dim embeddings table with ``edit`` applied to the
+    vector list; returns (sf_dir, vec_ids outside the audit's query
+    pick) so a bad vector can be planted on the corpus side."""
+    import hashlib
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mini_hadoop_spark.operators.similarity import MATRYOSHKA_QUERY_BUDGET
+
+    rng = random.Random(5)
+    ids = list(range(40))
+    vecs = [[rng.gauss(0, 1) for _ in range(16)] for _ in ids]
+    picked = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+    unpicked = sorted(picked[MATRYOSHKA_QUERY_BUDGET:])
+    edit(vecs, unpicked)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+                "label": pa.array([0] * len(ids), pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    return str(tmp_path), unpicked
+
+
+def test_matryoshka_rejects_ragged_vectors(spark, tmp_path):
+    """One vector one element short and another one element long still
+    total n*d elements, which reshape(n, d) would silently misalign:
+    the kernel must name a ragged vec_id instead (whichever task fails
+    first reports its own)."""
+    from mini_hadoop_spark.operators.similarity import similarity_matryoshka_agreement
+
+    def edit(vecs, unpicked):
+        a, b = unpicked[:2]
+        vecs[a] = vecs[a][:-1]
+        vecs[b] = vecs[b] + [0.5]
+
+    sf_dir, unpicked = _matryoshka_corpus(tmp_path, edit)
+    a, b = unpicked[:2]
+    with pytest.raises(Exception, match=rf"ValueError.*vec_id ({a} has 15|{b} has 17) dims"):
+        similarity_matryoshka_agreement(spark, sf_dir).collect()
+
+
+def test_matryoshka_rejects_null_vector(spark, tmp_path):
+    from mini_hadoop_spark.operators.similarity import similarity_matryoshka_agreement
+
+    def edit(vecs, unpicked):
+        vecs[unpicked[0]] = None
+
+    sf_dir, unpicked = _matryoshka_corpus(tmp_path, edit)
+    with pytest.raises(Exception, match=rf"ValueError.*vec_id {unpicked[0]} is null"):
+        similarity_matryoshka_agreement(spark, sf_dir).collect()
+
+
 def test_dedup_span_removal_planted_spans(spark, tmp_path):
     """Two docs share an 8-token run (positions 3-10 of doc 1, 0-7 of
     doc 2) and doc 3 is clean: the 4 overlapping duplicated 5-grams must
@@ -887,7 +947,7 @@ def test_semdedup_prunes_planted_cluster_dups(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mini_hadoop_spark.operators import similarity
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators.dedup import SEMDEDUP_TAU, dedup_semantic_semdedup
 
     rng = random.Random(11)
@@ -906,9 +966,9 @@ def test_semdedup_prunes_planted_cluster_dups(spark, tmp_path):
         ),
         str(tmp_path / "embeddings.parquet"),
     )
-    similarity.clear_memo()
+    artifacts.clear()
     out = {r.vec_id: r for r in dedup_semantic_semdedup(spark, str(tmp_path)).collect()}
-    similarity.clear_memo()
+    artifacts.clear()
 
     assert len(out) == len(allv)
     for i in range(6):

@@ -527,11 +527,15 @@ def _take_ordered_picker_plans():
         return ann_query_ids(_vectors(spark, sf_dir))
 
     def matryoshka_pick(spark, sf_dir):
-        # the full query hides the pick behind a localCheckpoint, so pin
-        # the module-level pick builder directly
-        from mini_hadoop_spark.operators.similarity import _matryoshka_pick, _vectors
+        # the full query collects the pick on the driver, so pin the
+        # picker it calls, with the audit's budget and vector payload
+        from mini_hadoop_spark.operators.similarity import (
+            MATRYOSHKA_QUERY_BUDGET,
+            _vectors,
+            ann_query_ids,
+        )
 
-        return _matryoshka_pick(_vectors(spark, sf_dir).select("vec_id", "e"))
+        return ann_query_ids(_vectors(spark, sf_dir), MATRYOSHKA_QUERY_BUDGET, payload=["e"])
 
     def outlier_audit(spark, sf_dir):
         from mini_hadoop_spark.operators.similarity import embedding_outlier_audit
@@ -620,4 +624,23 @@ def test_per_group_topk_plans_window_group_limit(spark, name):
         f"{name}: per-group rank filter no longer compiles to a partial "
         f"WindowGroupLimit — each low-cardinality group becomes one "
         f"corpus-sized task:\n{plan[:2000]}"
+    )
+
+
+def test_session_keying_only_in_artifacts():
+    """Session-scoped memos live in mini_hadoop_spark/artifacts.py alone:
+    a module that reads ``applicationId`` to key its own dict brings
+    back a memo that artifacts.clear() cannot reach.  engine/info.py
+    only reports the id."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "mini_hadoop_spark"
+    allowed = {pkg / "artifacts.py", pkg / "engine" / "info.py"}
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p not in allowed and "applicationId" in p.read_text()
+    )
+    assert not offenders, (
+        f"{offenders} read applicationId — memoize through artifacts.get instead"
     )

@@ -272,10 +272,11 @@ def lsh_family_mode(n: int) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_lsh_corpus(spark, n)
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import dedup
 
     def cold_builds(sf_dir: str) -> dict:
-        dedup.clear_memo()
+        artifacts.clear()
         t0 = time.perf_counter()
         pairs = dedup.near_dup_pairs(spark, sf_dir, "minhash")
         t_pairs = time.perf_counter() - t0
@@ -382,10 +383,11 @@ def semdedup_family_mode(n: int) -> int:
 
     from pyspark.sql import functions as F
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import dedup, similarity
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        artifacts.clear()
         k = similarity.semdedup_k(similarity.corpus_vector_count(spark, sf_dir))
         t0 = time.perf_counter()
         out = dedup.dedup_semantic_semdedup(spark, sf_dir)
@@ -487,10 +489,11 @@ def span_family_mode(n: int) -> int:
 
     from pyspark.sql import functions as F
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import dedup
 
     def cold_run(sf_dir: str) -> dict:
-        dedup.clear_memo()
+        artifacts.clear()
         t0 = time.perf_counter()
         out = dedup.dedup_span_removal(spark, sf_dir).localCheckpoint(eager=True)
         t = time.perf_counter() - t0
@@ -999,7 +1002,7 @@ def skew_family_mode() -> int:
 
     import __spark_entry__ as entry_mod
 
-    from mini_hadoop_spark.operators import dedup
+    from mini_hadoop_spark import artifacts
 
     queries = entry_mod.queries()
     names = ["join_salted_skew", "quality_bigram_lm_score", "dedup_span_removal"]
@@ -1014,9 +1017,9 @@ def skew_family_mode() -> int:
 
     rows = []
     for name in names:
-        dedup.clear_memo()
+        artifacts.clear()
         t1 = run(name, BASE)
-        dedup.clear_memo()
+        artifacts.clear()
         tn = run(name, corpus)
         rows.append({"name": name, "t_base": t1, "t_skew": tn, "ratio": tn / t1})
         print(f"{name}: base {t1:.2f}s -> skewed {tn:.2f}s (ratio {rows[-1]['ratio']:.2f})")
@@ -1102,10 +1105,11 @@ def ann_family_mode(n: int) -> int:
 
     from pyspark.sql import functions as F
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import similarity
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        artifacts.clear()
         k = similarity.ivf_k(similarity.corpus_vector_count(spark, sf_dir))
         t0 = time.perf_counter()
         out = similarity.similarity_ann_ivf(spark, sf_dir)
@@ -1246,10 +1250,11 @@ def classifier_family_mode(n: int) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_classifier_corpus(spark, n)
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import classifier
 
     def cold_run(sf_dir: str) -> dict:
-        classifier.clear_memo()
+        artifacts.clear()
         t0 = time.perf_counter()
         stats, w = classifier._train(spark, sf_dir)
         t = time.perf_counter() - t0
@@ -1584,6 +1589,7 @@ def budget_family_mode(n: int) -> int:
 
     from pyspark.sql import functions as F
 
+    from mini_hadoop_spark import artifacts
     from mini_hadoop_spark.operators import similarity
 
     def scored_pairs(sf_dir: str) -> int:
@@ -1594,7 +1600,7 @@ def budget_family_mode(n: int) -> int:
         return int(b * (v.count() - 1))
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        artifacts.clear()
         out = {}
         for name in (
             "similarity_matryoshka_agreement",
