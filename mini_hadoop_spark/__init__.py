@@ -11,6 +11,7 @@ multimodal columns) required by the driver contract (BASELINE.json
 
 Layout:
   session     — tuned SparkSession bootstrap
+  worker_daemon — the Python worker daemon that session starts
   sources     — table catalog (catalog), DFS-equivalent store/retrieve/
                 delete (dfs.FileStore), JSON-object + headered-TSV sinks
                 (sinks)

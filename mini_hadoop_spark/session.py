@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _physical_memory_bytes() -> int:
     """MemTotal from /proc/meminfo, else the POSIX physical page count."""
@@ -67,6 +69,11 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
         # server wants the same setting.  ~Tens of KB per entry; a few
         # hundred MB ceiling.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        # Python workers fork from worker_daemon, which spares each task
+        # re-reading pyspark.zip's directory; the package's parent on the
+        # workers' path lets them import it from any working directory.
+        .config("spark.python.daemon.module", "mini_hadoop_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # nanosAsLong is NOT set here: the catalog probes each file's
         # actual timestamp encoding and flips the conf only when a nanos
         # column is really present (sources/catalog.py).

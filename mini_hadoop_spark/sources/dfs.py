@@ -107,6 +107,11 @@ class FileStore:
             raise ValueError(f"invalid store filename: {filename!r}")
         return os.path.join(self.root, filename)
 
+    def _read(self, filename: str):
+        # Every stored file has BLOCK_SCHEMA: giving it to the reader
+        # spares the Spark job that would infer it from a footer.
+        return self.spark.read.schema(BLOCK_SCHEMA).parquet(self._path(filename))
+
     def exists(self, filename: str) -> bool:
         return os.path.isdir(self._path(filename))
 
@@ -241,10 +246,17 @@ class FileStore:
             blocks = range_df.mapInPandas(read_ranges, BLOCK_SCHEMA)
             blocks.write.parquet(self._path(filename))
 
-            # Count what was WRITTEN (metadata-only scan), not the source
-            # lineage — re-reading the local file could disagree if it
-            # was appended to meanwhile.
-            n_blocks = self.spark.read.parquet(self._path(filename)).count()
+            # The write job's own tasks counted the blocks they wrote (the
+            # progress accumulator, merged on the driver before the job
+            # returns), so no second job re-reads the stored file.  A
+            # count that disagrees with the planned ranges means blocks
+            # were lost or written twice: fail rather than report it.
+            n_blocks = acc.value
+            if n_blocks != len(ranges):
+                raise RuntimeError(
+                    f"store_file {filename!r}: wrote {n_blocks} blocks, "
+                    f"planned {len(ranges)}"
+                )
             self._op_update(
                 op_id,
                 state="completed",
@@ -316,7 +328,7 @@ class FileStore:
         op_id = self._op_start("retrieve", filename)
         try:
             df = (
-                self.spark.read.parquet(self._path(filename))
+                self._read(filename)
                 .select("block_idx", "data")
                 .orderBy(F.col("block_idx"))
             )
@@ -355,7 +367,7 @@ class FileStore:
         contract (task_executor.ex:141)."""
         if not self.exists(filename):
             raise FileNotFoundError(f"not in store: {filename}")
-        return self.spark.read.parquet(self._path(filename)).select("block_idx", "data")
+        return self._read(filename).select("block_idx", "data")
 
     def delete_file(self, filename: str) -> bool:
         if not self.exists(filename):
@@ -379,7 +391,7 @@ class FileStore:
             if os.path.isfile(os.path.join(path, f))
         )
         agg = (
-            self.spark.read.parquet(path)
+            self._read(filename)
             .agg(
                 F.count("*").alias("n_blocks"),
                 F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("content_bytes"),

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from mini_hadoop_spark.sources.catalog import read_parquet
+
 WRITE_CHUNK_SIZE = 250  # job_runner.ex:12
 _HEADER_PAD = 50  # job_runner.ex:286 String.pad_trailing(..., 50)
 
@@ -141,7 +143,7 @@ def compact_parquet(
     ]
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     tmp = path.rstrip("/") + "._compact_tmp"
     old = path.rstrip("/") + "._compact_old"
     # coalesce, not repartition: merging never needs a shuffle

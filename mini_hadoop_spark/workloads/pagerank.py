@@ -24,6 +24,18 @@ iteration count (the classic iterative-Spark pitfall).  Pass
 blocks on executors only and is lost on executor death — routine at 1000
 executors — while ``checkpoint()`` writes to the fault-tolerant checkpoint
 dir at the cost of an extra write.
+
+Sum order and output rounding: a page's rank is a double sum of its
+contributions, and the order of that sum follows the plan — the join
+strategy (the sort-merge pin below, or a broadcast), the partitioning of
+the edges and the shuffle partition count.  Different orders can differ
+in the last bits.  Callers (``workloads/parity.py`` and its DuckDB
+oracle) round ranks to 8 decimals, which hides the order only while each
+sum stays clear of a rounding boundary: a rank whose 9th decimal sits
+within a few ulps of ...5 can round either way.  So a plan change here
+(join strategy, partitioning, union order) needs the ``pagerank_2iter``
+oracle, which stays in the per-change oracle gate
+(``tests/test_oracle_battery.py``), to pass at every checked scale.
 """
 
 from __future__ import annotations
@@ -67,8 +79,8 @@ def pagerank(
     #     than repartition+persist+unpersist for so few references
     #     (measured: cold 4.4 s vs 8.0 s, steady 1.9 s vs 3.1 s at sf0.1)
     #     — the one-time shuffle only amortizes from ~3 iterations up.
-    # Values are identical either way (same FP ops; partial-sum order is
-    # absorbed by the 8-decimal output rounding, oracle-proven).
+    # Same FP ops either way; only the partial-sum order differs (see
+    # "Sum order and output rounding" in the module docstring).
     persist_inputs = iterations >= 3
     edges = edges.select("src", "dst")
     if persist_inputs:
@@ -128,8 +140,8 @@ def pagerank(
         # of pagerank_2iter's 0.84 core-scaling ratio: 4 sequential
         # ~150k-row broadcast builds per run).  A/B at sf0.1: 1.54 →
         # 1.23 s min-of-6 interleaved.  Join rows are unchanged; the
-        # per-page sum order shifts, which the 8-decimal output rounding
-        # absorbs (the module's established oracle-proven convention).
+        # per-page sum order shifts (see "Sum order and output rounding"
+        # in the module docstring).
         contribs = edges.join(rate.hint("SHUFFLE_MERGE"), "src").select(
             F.col("dst").alias("page"), (F.lit(damping) * F.col("w")).alias("contrib")
         )

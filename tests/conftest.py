@@ -26,6 +26,25 @@ def spark():
     spark.stop()
 
 
+def jobs_started(spark, fn) -> list[str]:
+    """Run ``fn`` and return one name per Spark job it started: the name
+    of the job's final stage (``parquet at ...`` for a footer-inference
+    or a parquet write job, ``collect at ...`` for a collect).  Waits for
+    the listener bus on both sides, since the status store is fed
+    asynchronously."""
+    bus = spark._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    names = []
+    for job_id in sorted(set(tracker.getJobIdsForGroup(None)) - before):
+        stage = tracker.getStageInfo(max(tracker.getJobInfo(job_id).stageIds))
+        names.append(stage.name if stage else "?")
+    return names
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's DuckDB side: tables pre-registered as views."""
     con = duckdb.connect()

@@ -155,3 +155,101 @@ def test_documents_schema_drift_tolerance(spark, tmp_path):
     assert [r.doc_id for r in rows] == [1, 2]
     # the two texts normalize identically -> identical fingerprints
     assert rows[0].fingerprint == rows[1].fingerprint
+
+
+def test_load_table_starts_no_spark_job(spark):
+    """The footer is read once with pyarrow and its schema handed to the
+    reader, so building a table's DataFrame runs no Spark job (no
+    schema-inference job per table per session)."""
+    from mini_hadoop_spark import artifacts
+    from tests.conftest import SF_DIR, jobs_started
+
+    artifacts.clear()
+    for name in catalog.TABLES:
+        assert jobs_started(spark, lambda: catalog.load_table(spark, SF_DIR, name)) == [], name
+
+
+def _write_fixture(d, kind):
+    """One parquet file per timestamp encoding the loader adapts to,
+    plus the drifted documents table; returns its path."""
+    d.mkdir()
+    if kind == "drift":
+        path = d / "documents.parquet"
+        cols = {
+            "extra_col": pa.array([1, 2], pa.int64()),
+            "source": pa.array(["web", "web"], pa.string()),
+            "text": pa.array(["hello world", "HELLO  world"], pa.string()),
+            "lang": pa.array(["en", "en"], pa.string()),
+            "n_chars": pa.array([11, 12], pa.int64()),
+            "doc_id": pa.array([1, 2], pa.int64()),
+        }
+        pq.write_table(pa.table(cols), str(path))
+        return str(path)
+    path = d / "events.parquet"
+    us = [_micros(t) for t in _TS_US]
+    ts = {
+        "nanos": pa.array([u * 1000 for u in us], pa.timestamp("ns")),
+        "ntz": pa.array(_TS_US, pa.timestamp("us")),
+        "utc": pa.array(_TS_US, pa.timestamp("us", tz="UTC")),
+        "int96": pa.array(_TS_US, pa.timestamp("ns")),
+    }
+    if kind == "mixed":
+        cols = {f"c_{k}": v for k, v in ts.items() if k != "int96"}
+        cols["id"] = pa.array(range(len(us)), pa.int64())
+    else:
+        cols = {"ts": ts[kind], **_base_cols(len(us))}
+    pq.write_table(pa.table(cols), str(path), use_deprecated_int96_timestamps=kind == "int96")
+    return str(path)
+
+
+def _testdata_tables() -> list[str]:
+    """Every table of every scale factor next to the test scale factor."""
+    import glob
+    import os
+
+    from tests.conftest import SF_DIR
+
+    return sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "*.parquet")))
+
+
+@pytest.mark.parametrize(
+    "source", _testdata_tables() + ["nanos", "ntz", "utc", "int96", "mixed", "drift"]
+)
+def test_footer_schema_equals_inferred(spark, tmp_path, source):
+    """The schema derived from the footer is the one Spark infers for the
+    same file, and the footer path is the one taken (no fallback)."""
+    path = source if source.endswith(".parquet") else _write_fixture(tmp_path / source, source)
+    prior = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
+    # Spark can only infer a nanos column with nanosAsLong, which the
+    # loader sets for such files.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        encodings, arrow_schema = catalog._probe(spark, path)
+        derived = catalog._spark_schema(spark, arrow_schema, encodings)
+        assert derived is not None
+        assert spark.read.schema(derived).parquet(path).schema == spark.read.parquet(path).schema
+    finally:
+        if prior is None:
+            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+        else:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior)
+
+
+@pytest.mark.parametrize(
+    "arrow_type, values",
+    [(pa.uint32(), [0, 2**32 - 1]), (pa.duration("s"), [5, 7])],
+    ids=["uint32", "duration"],
+)
+def test_unmapped_type_loads_through_inference(spark, tmp_path, arrow_type, values):
+    """A column whose arrow mapping is not what Spark infers (uint32 has
+    none; a duration maps to an interval, while Spark reads its INT64 as
+    a long) loads through Spark's own inference with unchanged values."""
+    d = tmp_path / "unmapped"
+    d.mkdir()
+    path = str(d / "region.parquet")
+    pq.write_table(pa.table({"id": pa.array(values, arrow_type), "name": ["a", "b"]}), path)
+    encodings, arrow_schema = catalog._probe(spark, path)
+    assert catalog._spark_schema(spark, arrow_schema, encodings) is None
+    df = catalog.load_table(spark, str(d), "region")
+    assert df.schema["id"].dataType.typeName() == "long"
+    assert sorted(r.id for r in df.collect()) == values

@@ -878,6 +878,46 @@ def test_filestore_file_info_no_trailing_newline(spark, tmp_path):
     assert fs.file_info("g")["n_lines"] == 3
 
 
+def test_filestore_jobs_run_no_footer_inference(spark, tmp_path):
+    """store_file is one Spark job (the write; its tasks count the
+    blocks), and reads of a stored file pass BLOCK_SCHEMA, so none of
+    them starts a footer-inference job (a job named ``parquet at``)."""
+    from mini_hadoop_spark.sources.dfs import FileStore
+    from tests.conftest import jobs_started
+
+    src = tmp_path / "h.txt"
+    content = b"alpha\nbeta\ngamma\n" * 50
+    src.write_bytes(content)
+    fs = FileStore(spark, str(tmp_path / "store"))
+    n_blocks = []
+    store_jobs = jobs_started(spark, lambda: n_blocks.append(fs.store_file("h", str(src), block_size=64)))
+    assert len(store_jobs) == 1, store_jobs
+    assert n_blocks == [(len(content) + 63) // 64]
+    assert jobs_started(spark, lambda: fs.blocks("h")) == []
+    for read in (lambda: fs.retrieve_file("h", str(tmp_path / "out.txt")), lambda: fs.file_info("h")):
+        names = jobs_started(spark, read)
+        assert names and not [n for n in names if n.startswith("parquet at")], names
+    assert (tmp_path / "out.txt").read_bytes() == content
+
+
+def test_filestore_store_fails_when_block_count_disagrees(spark, tmp_path, monkeypatch):
+    """store_file trusts the count its write tasks report only when it
+    equals the planned block count; otherwise the store fails and the
+    operation is recorded as failed."""
+    from mini_hadoop_spark.sources.dfs import FileStore
+
+    src = tmp_path / "k.txt"
+    src.write_bytes(b"x" * 100)
+    fs = FileStore(spark, str(tmp_path / "store"))
+    sc = spark.sparkContext
+    accumulator = sc.accumulator
+    # one phantom block: the accumulator starts at 1 instead of 0
+    monkeypatch.setattr(sc, "accumulator", lambda value, *a: accumulator(value + 1, *a))
+    with pytest.raises(RuntimeError, match="wrote 11 blocks, planned 10"):
+        fs.store_file("k", str(src), block_size=10)
+    assert fs.file_op_info(1)["state"] == "failed"
+
+
 def test_cluster_info_shape(spark):
     from mini_hadoop_spark.engine.info import cluster_info
 

@@ -644,3 +644,37 @@ def test_session_keying_only_in_artifacts():
     assert not offenders, (
         f"{offenders} read applicationId — memoize through artifacts.get instead"
     )
+
+
+def test_sources_read_parquet_with_a_schema():
+    """A parquet read without ``.schema(...)`` makes Spark run a job to
+    infer the schema from a footer, although the catalog has already
+    read that footer (and the DFS declares BLOCK_SCHEMA).  In
+    ``mini_hadoop_spark/sources/`` only the catalog's inference fallback,
+    ``catalog._read``, may call ``.read.parquet(`` directly."""
+    import ast
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parent.parent / "mini_hadoop_spark" / "sources"
+    offenders = []
+    for p in sorted(src.rglob("*.py")):
+        tree = ast.parse(p.read_text())
+        allowed: set[int] = set()
+        if p.name == "catalog.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_read":
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{p.relative_to(src)}:{node.lineno}")
+    assert not offenders, (
+        f"{offenders} call .read.parquet( without .schema( — pass the schema "
+        "(catalog.read_parquet derives it from the footer)"
+    )
